@@ -992,7 +992,10 @@ def clear_stage_caches() -> None:
     source table in place within one application, or after an
     executor loss (the memoized localCheckpoint blocks are not
     fault-tolerant — a later cache hit would fail on truncated
-    lineage instead of recomputing)."""
+    lineage instead of recomputing). The parquet schema cache behind
+    ``tables.read_parquet`` is left alone: its entries are keyed by
+    each local path's file signature and the inference confs, so a
+    rewritten file or changed conf already misses."""
     _GRAM_STAGE_CACHE.clear()
     try:
         from hadoop_deliver_spark.operators import llm_text

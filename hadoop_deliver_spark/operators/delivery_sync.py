@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import tbl
+from hadoop_deliver_spark.tables import read_parquet, tbl
 
 
 def _manifest(df: DataFrame) -> DataFrame:
@@ -142,7 +142,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is a single file with a fixed name at every sf, so the
     oracle can state the expected (file_name, counts) row exactly
     without filesystem access."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     return (
         li.select(
             F.regexp_extract(

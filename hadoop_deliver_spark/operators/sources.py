@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import dec2, tbl
+from hadoop_deliver_spark.tables import dec2, read_parquet, tbl
 
 _STAGE = "/tmp/hds_stage"
 _counter = itertools.count()
@@ -266,7 +266,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_dir(sf_dir, "events_stream_src"),
         "parquet",
     )
-    schema = spark.read.parquet(stage).schema
+    schema = read_parquet(spark, stage).schema
     return spark.readStream.schema(schema).format("parquet").load(stage)
 
 

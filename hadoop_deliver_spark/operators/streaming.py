@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import dec2
+from hadoop_deliver_spark.tables import dec2, read_parquet
 from hadoop_deliver_spark.operators.sources import (
     _counter,
     _ensure_staged,
@@ -477,7 +477,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (src, cp, out):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(src)
-    schema = spark.read.parquet(os.path.join(staged, "a_main.parquet")).schema
+    schema = read_parquet(spark, os.path.join(staged, "a_main.parquet")).schema
 
     def run_once():
         ev = (
@@ -585,7 +585,7 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
     ev = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(read_parquet(spark, src).schema)
         .format("parquet")
         .option("maxFilesPerTrigger", 1)
         .load(src)
@@ -684,7 +684,7 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(grow, exist_ok=True)
 
-    schema = spark.read.parquet(src4).schema
+    schema = read_parquet(spark, src4).schema
 
     def run_once() -> None:
         q = (

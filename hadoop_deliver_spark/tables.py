@@ -11,15 +11,28 @@ ns→µs cast; a float ``/1e9`` division would drift by ~0.5 µs at 2024
 epochs). Current fixtures write TIMESTAMP(MICROS) which decodes
 natively as TIMESTAMP_NTZ; the shim is applied only when the column
 actually arrives as int64.
+
+Every fixture-table read, and every re-read of a stable staged copy,
+goes through :func:`read_parquet`, which resolves a local path's
+parquet schema once. ``spark.read.parquet`` without a schema starts a
+Spark job just to read footers; on the short scan → filter → deliver
+queries this engine serves, that fixed cost is a large share of each
+op. The resolver keeps one entry per absolute local path, keyed by the
+path's file signature and the parquet confs that change inference, and
+hands Spark the known schema on a hit. Remote paths (any URI scheme)
+are read plainly; a signature for HDFS/S3 through Hadoop
+``FileSystem`` is left for later.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = [
     "region",
@@ -71,10 +84,81 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# Parquet confs whose value changes the schema Spark infers from a footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# Absolute local path -> (file signature, inference conf values, schema).
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _stat_sig(st: os.stat_result) -> tuple:
+    # ctime too: os.utime can pin a rewritten file's mtime to its old value.
+    return (st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
+
+
+def _signature(path: str) -> tuple:
+    """Signature of a file, or of every file under a directory.
+    Raises OSError if the path (or a file under it) cannot be stat'ed."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return _stat_sig(st)
+    sigs = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            sigs.append((os.path.relpath(p, path), *_stat_sig(os.stat(p))))
+    return tuple(sorted(sigs))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema once.
+
+    The cache holds one entry per absolute local path: the path's file
+    signature (size, mtime, ctime and inode of the file, or of every
+    file under a directory), the values of the parquet confs that
+    change inference, and the inferred ``StructType``. On a hit the
+    read is ``spark.read.schema(cached).parquet(path)``, which starts
+    no Spark job. A changed file, a changed conf or a new path misses,
+    infers as usual and replaces that path's entry, so the cache is
+    bounded by the number of distinct paths read. The DataFrame itself
+    is never cached: self-joins need a fresh relation per call.
+
+    Only local paths are cached. A path with a URI scheme, or one
+    ``os.stat`` cannot see (a missing path, a glob pattern), takes the
+    plain read, so Spark still raises its own errors
+    (``PATH_NOT_FOUND``). Because the key alone decides validity,
+    :func:`hadoop_deliver_spark.api.clear_stage_caches` leaves this
+    cache alone: there is nothing stale to drop.
+    """
+    if urlsplit(path).scheme:
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    try:
+        sig = _signature(key)
+    except OSError:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == sig and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path)
+    # The signature was taken before inference: a rewrite racing this
+    # read leaves an entry that misses next time, never a stale hit.
+    # Concurrent misses may both infer; each stores a whole entry.
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (sig, confs, df.schema)
+    return df
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, applying ingestion shims."""
     prepare_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         dt = df.schema["ts"].dataType
         if isinstance(dt, LongType):
