@@ -26,11 +26,13 @@ Quick start — near-dup dedup of your own table in 5 lines::
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Sequence
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from hadoop_deliver_spark.tables import file_signature
 
 __all__ = [
     "dot",
@@ -177,11 +179,11 @@ def minhash_pairs(
     loss matters, materialize the shingle stage to a table (or use
     reliable ``checkpoint()``) and pass that in instead.
 
-    Caching contract: that stage is memoized per (application, plan,
-    source-file listing) and shared with the other dedup operators.
-    File rewrites are detected automatically (fresh part-file names →
-    fresh key); if you mutate the SAME files in place within one
-    application, or lose an executor, call
+    Caching contract: that stage is memoized by :func:`_stage_memo`
+    and shared with the other dedup operators. A rewritten local
+    file changes its file signature and so the key; after an
+    executor loss, or a change the key cannot see (remote files
+    rewritten under the same names, non-file sources), call
     :func:`clear_stage_caches` before the next call.
 
     >>> minhash_pairs(docs, "doc_id", "text", threshold=0.5)
@@ -213,40 +215,16 @@ def _staged_minhash_parts(
     n_perm: int,
     n_bands: int,
 ):
-    """Session-memoized :func:`_minhash_parts` (r12): the banded-LSH
-    candidate stage — 128 min-hash aggregates over the inverted index
-    plus the band self-join — is re-derived identically by every
-    MinHash consumer in a suite run (llm_dedup_minhash,
-    llm_bleu_pairs, llm_rouge_pairs, the near-dup cluster family's
-    label builder, llm_dedup_candidate_stats), so the candidate pair
-    list (near-dup-sized, tiny) is ``localCheckpoint``-ed once per
-    (application, corpus, parameters) under the gram-stage cache's
-    keying/eviction/staleness contract. Returns (sets, cands) exactly
-    like :func:`_minhash_parts`."""
-    spark = df.sparkSession
-    key = (
-        "mhcands",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        shingle_k,
-        n_perm,
-        n_bands,
-    )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    sets, cands = _minhash_parts(
-        df, id_col, text_col, shingle_k, n_perm, n_bands
-    )
-    cands = cands.localCheckpoint(eager=True)
-    _GRAM_STAGE_CACHE[key] = (sets, cands)
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return sets, cands
+    """Memoized :func:`_minhash_parts` (see :func:`_stage_memo`): every
+    MinHash consumer in a session shares one checkpointed candidate
+    pair list. Returns (sets, cands) exactly like :func:`_minhash_parts`."""
+    params = (id_col, text_col, shingle_k, n_perm, n_bands)
+
+    def build():
+        sets, cands = _minhash_parts(df, *params)
+        return sets, cands.localCheckpoint(eager=True)
+
+    return _stage_memo("minhash", [df], params, build)
 
 
 def _minhash_parts(
@@ -261,18 +239,10 @@ def _minhash_parts(
     candidate-volume plan guard. Returns (sets, cands)."""
     assert n_perm >= 2 * n_bands, "need ≥2 minhash rows per band"
     rows = n_perm // n_bands
-    # localCheckpoint, not cache(): the shingle sets are referenced by
-    # the lazily returned plan (minhash build + exact refine), and a
-    # cache() here would pin executor storage for the whole session —
-    # checkpoint blocks are instead released by the ContextCleaner
-    # when the cache entry is evicted. Session-memoized and spread to
-    # defaultParallelism first (the _staged_gram_sets device): a
-    # single-file corpus plans as ONE partition, and the 128 xxhash64
-    # evaluations per posting row run at the CHECKPOINT's partition
-    # width — the narrow source serialized the whole minhash build on
-    # one core. Shared across every minhash caller in the session
-    # (dedup, threshold sweep, candidate stats, component labels).
-    sets = _staged_shingle_sets(df, id_col, text_col, shingle_k)
+    # The memoized, spread shingle checkpoint: the 128 xxhash64
+    # evaluations per posting row run at the checkpoint's partition
+    # width, not the (often single-file) source's.
+    sets = _staged_sets(shingle_sets, df, id_col, text_col, shingle_k)
     inv = sets.select(id_col, F.explode("shingles").alias("sh"))
     # (r12 note: a hash-distinct-shingles-then-join variant was
     # measured SLOWER here — xxhash64 on short strings is cheap
@@ -949,147 +919,88 @@ def char_gram_sets(
     )
 
 
-#: session-scoped memo of the raw char-gram checkpoint shared by the
-#: jaccard/containment candidate stages (the operators/_cc_cache
-#: precedent): the gram-set expression (transform + array_distinct
-#: over the corpus) is the single most re-evaluated stage in a full
-#: query-suite run — jaccard, containment, and their report queries
-#: each re-derived it from scratch pre-round-11. Keyed by
-#: (applicationId, df.semanticHash(), schema, inputFiles snapshot,
-#: id_col, text_col, k). The inputFiles snapshot (sorted source-file
-#: listing) is the DATA-version component: rewriting a parquet path
-#: produces fresh UUID part-file names, so a re-read of the same path
-#: misses the cache instead of returning stale grams (round-11 advice
-#: item). Residual contract — in-place mutation of the SAME file
-#: names within one application (or non-file sources, where
-#: inputFiles() is empty) is still assumed not to happen; callers
-#: that do that must call :func:`clear_stage_caches` first. The
-#: cached stages are ``localCheckpoint`` blocks: NON-recoverable
-#: after an executor loss — :func:`clear_stage_caches` also resets
-#: that state so the next call recomputes. FIFO-capped — evicted
-#: DataFrames are GC'd and the ContextCleaner releases their blocks.
-_GRAM_STAGE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_GRAM_STAGE_CACHE_MAX = 8
+#: Session memo of the expensive intermediate stages the dedup and
+#: graph operators share (gram/shingle sets, LSH and cosine candidate
+#: lists, the co-purchase projection, the IVF search, the near-dup
+#: component labels). Entries are eager ``localCheckpoint`` results,
+#: keyed by :func:`_stage_memo`. FIFO-capped; an evicted entry's
+#: blocks are released by the ContextCleaner once it is GC'd.
+_STAGE_MEMO: dict[tuple, object] = {}
+_STAGE_MEMO_MAX = 16
 
 
-def _data_version(df: DataFrame) -> int:
-    """Driver-side data-version fingerprint for stage-cache keys: a
-    hash of the sorted source-file listing behind ``df``. File-based
-    rewrites (new part-file UUIDs) change it; non-file sources hash
-    the empty listing (fall back to plan-only keying)."""
+def _stage_memo(tag: str, sources: Sequence[DataFrame], params: tuple, build):
+    """``build()`` once per (tag, application, sources, params).
+
+    Each source DataFrame enters the key as its ``semanticHash()``,
+    schema and :func:`_data_version`, so a changed plan or a rewritten
+    local file misses. ``build`` must return materialized stages
+    (eager ``localCheckpoint``): those are NOT fault-tolerant, so after
+    an executor loss, or an in-place change the key cannot see (remote
+    files rewritten under the same names, non-file sources), call
+    :func:`clear_stage_caches` first."""
+    key = (
+        tag,
+        sources[0].sparkSession.sparkContext.applicationId,
+        *((s.semanticHash(), str(s.schema), _data_version(s)) for s in sources),
+        params,
+    )
+    if key not in _STAGE_MEMO:
+        _STAGE_MEMO[key] = build()
+        while len(_STAGE_MEMO) > _STAGE_MEMO_MAX:
+            del _STAGE_MEMO[next(iter(_STAGE_MEMO))]
+    return _STAGE_MEMO[key]
+
+
+def _data_version(df: DataFrame) -> tuple:
+    """Data-version part of a stage-memo key: each input file of
+    ``df`` with its :func:`~hadoop_deliver_spark.tables.file_signature`
+    when it is local, by name alone when it is remote. Non-file
+    sources give ``()`` (plan-only keying)."""
     try:
         files = df.inputFiles()
     except Exception:  # non-file plans (e.g. in-memory relations)
         files = []
-    return hash(tuple(sorted(files)))
+    out = []
+    for uri in sorted(files):
+        parts, sig = urlsplit(uri), None
+        if parts.scheme == "file":
+            try:
+                sig = file_signature(unquote(parts.path))
+            except OSError:  # gone since listing: the read itself raises
+                pass
+        out.append((uri, sig))
+    return tuple(out)
 
 
 def clear_stage_caches() -> None:
-    """Drop every session-memoized dedup/graph stage: the gram/shingle
-    ``localCheckpoint`` memo here, the near-dup component-label
-    cache in ``operators.llm_text``, and the co-purchase projection
-    memo in ``operators.graph``. Call this after mutating a
-    source table in place within one application, or after an
-    executor loss (the memoized localCheckpoint blocks are not
-    fault-tolerant — a later cache hit would fail on truncated
-    lineage instead of recomputing). The parquet schema cache behind
-    ``tables.read_parquet`` is left alone: its entries are keyed by
-    each local path's file signature and the inference confs, so a
-    rewritten file or changed conf already misses."""
-    _GRAM_STAGE_CACHE.clear()
-    try:
-        from hadoop_deliver_spark.operators import llm_text
-
-        for cached in llm_text._cc_cache.values():
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
-        llm_text._cc_cache.clear()
-    except Exception:
-        pass
-    try:
-        from hadoop_deliver_spark.operators import graph as _graph_ops
-
-        _graph_ops._co_purchase_cache.clear()
-    except Exception:
-        pass
-    try:
-        from hadoop_deliver_spark.operators import llm_ivf as _ivf_ops
-
-        _ivf_ops._ivf_cache.clear()
-    except Exception:
-        pass
+    """Drop every entry of the session stage memo
+    (:func:`_stage_memo`). Call this after an executor loss (the
+    memoized localCheckpoint blocks are not fault-tolerant — a later
+    hit would fail on truncated lineage instead of recomputing), or
+    after changing a source the memo key cannot see: remote files
+    rewritten under the same names, or a non-file source. The parquet
+    schema cache behind ``tables.read_parquet`` is left alone: its
+    entries are keyed by each local path's file signature and the
+    inference confs, so a rewritten file or changed conf already
+    misses."""
+    _STAGE_MEMO.clear()
 
 
-def _staged_gram_sets(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """The memoized raw gram stage: ``char_gram_sets`` over ``df``,
-    spread to the session's default parallelism when the source
-    arrives narrow (a single small parquet file plans as ONE
-    partition, serializing the whole gram map on one core — the
-    round-10 sf0.1 profile showed exactly that), then
-    ``localCheckpoint``-ed once per (application, corpus, k) and
-    shared by every caller in the session."""
-    spark = df.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        k,
-    )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    par = spark.sparkContext.defaultParallelism
-    src = df
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    grams = char_gram_sets(src, id_col, text_col, k=k).localCheckpoint(
-        eager=True
-    )
-    _GRAM_STAGE_CACHE[key] = grams
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return grams
+def _staged_sets(sets_fn, df: DataFrame, id_col: str, text_col: str, k: int):
+    """Memoized ``sets_fn(df, id_col, text_col, k=k)`` checkpoint
+    (:func:`char_gram_sets` or :func:`shingle_sets`), shared by every
+    caller in the session. The source is spread to the session's
+    default parallelism first when it arrives narrow: a single small
+    parquet file plans as ONE partition, which serialized the whole
+    set build on one core."""
 
+    def build():
+        par = df.sparkSession.sparkContext.defaultParallelism
+        src = df if df.rdd.getNumPartitions() >= par else df.repartition(par)
+        return sets_fn(src, id_col, text_col, k=k).localCheckpoint(eager=True)
 
-def _staged_shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """The word-shingle twin of :func:`_staged_gram_sets`: memoized
-    ``shingle_sets`` checkpoint per (application, corpus, k), spread
-    to default parallelism when the source arrives narrow. Shares the
-    same FIFO-capped cache (keys carry a stage discriminator)."""
-    spark = df.sparkSession
-    key = (
-        "shingle",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        k,
-    )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    par = spark.sparkContext.defaultParallelism
-    src = df
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    sets = shingle_sets(src, id_col, text_col, k=k).localCheckpoint(
-        eager=True
-    )
-    _GRAM_STAGE_CACHE[key] = sets
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return sets
+    return _stage_memo(sets_fn.__name__, [df], (id_col, text_col, k), build)
 
 
 #: refine-path switch for :func:`jaccard_pairs` / :func:`containment_pairs`
@@ -1254,10 +1165,8 @@ def jaccard_pairs(
     loss mid-query fails the query instead of recomputing). At
     100 TB, if recomputation-on-loss matters, materialize the gram
     stage to a table (or use reliable ``checkpoint()``) upstream.
-    The stage is memoized per (application, plan, source-file
-    listing); in-place same-file mutation within one application
-    needs :func:`clear_stage_caches` first (file REWRITES re-key
-    automatically via the part-file listing).
+    The stage is memoized by :func:`_stage_memo` under the same
+    contract as :func:`minhash_pairs`.
 
     >>> jaccard_pairs(docs, "pk", "body", threshold=0.6)
     """
@@ -1360,11 +1269,8 @@ def _jaccard_parts(
     candidate-volume plan guard (tests/test_properties.py) so the
     guard measures the REAL stage, not a replica. Returns
     (grams, inv, gdf, cands)."""
-    # session-memoized localCheckpoint (see _staged_gram_sets):
-    # referenced by the lazily returned plan (candidate stage +
-    # bitmap refine) and shared with the containment twin; blocks are
-    # released by the ContextCleaner on cache eviction
-    grams = _staged_gram_sets(df, id_col, text_col, char_k)
+    # memoized checkpoint, shared with the containment twin
+    grams = _staged_sets(char_gram_sets, df, id_col, text_col, char_k)
     inv = grams.select(
         id_col, F.size("gs").alias("_jp_n"), F.explode("gs").alias("_jp_g")
     )
@@ -1496,9 +1402,7 @@ def containment_pairs(
     ``localCheckpoint``-ed — same immediate-job / truncated-lineage
     trade as :func:`jaccard_pairs`; materialize the gram stage
     upstream if recomputation-on-loss matters. Same memo contract
-    too: keyed by (application, plan, source-file listing); call
-    :func:`clear_stage_caches` after in-place same-file mutation or
-    an executor loss.
+    too (:func:`_stage_memo`).
 
     >>> containment_pairs(docs, "pk", "body", threshold=0.9)
     """
@@ -1628,16 +1532,13 @@ def _containment_parts(
     The cap is the published web-dedup fan-out bound: no surviving
     posting list exceeds P‰ of the corpus, so the prefix×posting
     candidate join has bounded per-key fan-out at any corpus size."""
-    # session-memoized localCheckpoint (see _staged_gram_sets) — same
-    # storage-lifecycle argument as jaccard_pairs/minhash_pairs, plus
-    # cross-query reuse: the raw gram stage is SHARED with the
-    # jaccard twin, so in a full suite run only the first of the two
-    # pays the corpus gram map. With the cap there is a SECOND
-    # checkpoint below, and it earns its keep (measured at sf0.1):
-    # the capped rebuild is consumed twice (df count + posting
-    # rebuild), and checkpointing turns both consumers into ~1 s
-    # scans.
-    grams = _staged_gram_sets(df, id_col, text_col, char_k)
+    # memoized checkpoint, shared with the jaccard twin, so in a full
+    # suite run only the first of the two pays the corpus gram map.
+    # With the cap there is a SECOND checkpoint below, and it earns its
+    # keep (measured at sf0.1): the capped rebuild is consumed twice
+    # (df count + posting rebuild), and checkpointing turns both
+    # consumers into ~1 s scans.
+    grams = _staged_sets(char_gram_sets, df, id_col, text_col, char_k)
     par = df.sparkSession.sparkContext.defaultParallelism
     if max_df_permille is not None:
         ndocs = grams.count()
@@ -2087,33 +1988,16 @@ def simhash_pairs(
 def _staged_simhash_parts(
     df: DataFrame, id_col: str, text_col: str, n_bands: int
 ) -> DataFrame:
-    """Session-memoized :func:`_simhash_parts` (r12): the 64-bit-vote
-    fingerprint build + band self-join re-runs identically for
-    llm_dedup_simhash and llm_dedup_candidate_stats; the candidate
-    pair list (near-dup-sized) is ``localCheckpoint``-ed once per
-    (application, corpus, n_bands) under the gram-stage cache's
-    keying/eviction/staleness contract."""
-    spark = df.sparkSession
-    key = (
-        "shcands",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        n_bands,
+    """Memoized :func:`_simhash_parts` candidate pair list (see
+    :func:`_stage_memo`)."""
+    return _stage_memo(
+        "simhash",
+        [df],
+        (id_col, text_col, n_bands),
+        lambda: _simhash_parts(df, id_col, text_col, n_bands).localCheckpoint(
+            eager=True
+        ),
     )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cands = _simhash_parts(df, id_col, text_col, n_bands).localCheckpoint(
-        eager=True
-    )
-    _GRAM_STAGE_CACHE[key] = cands
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return cands
 
 
 def _simhash_parts(
@@ -2258,35 +2142,15 @@ def _principal_directions(base: DataFrame, k: int):
 def _staged_cosine_parts(
     df: DataFrame, id_col: str, vec_col: str, tau: float, k: int = 16
 ):
-    """Session-memoized :func:`_cosine_parts` (r12): the normalized
-    base checkpoint, the principal-direction moment pass and the
-    grid + Bessel candidate join re-run identically for
-    llm_dedup_embedding / llm_semdedup-style consumers and
-    llm_dedup_candidate_stats; the surviving candidate id pairs
-    (near-dup-sized) are ``localCheckpoint``-ed once per
-    (application, embedding plan, tau, k) under the gram-stage
-    cache's keying/eviction/staleness contract."""
-    spark = df.sparkSession
-    key = (
-        "coscands",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        vec_col,
-        tau,
-        k,
-    )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    base, cands = _cosine_parts(df, id_col, vec_col, tau, k)
-    cands = cands.localCheckpoint(eager=True)
-    _GRAM_STAGE_CACHE[key] = (base, cands)
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return base, cands
+    """Memoized :func:`_cosine_parts` (see :func:`_stage_memo`): the
+    surviving candidate id pairs are checkpointed once per (embedding
+    plan, tau, k). Returns (base, cands)."""
+
+    def build():
+        base, cands = _cosine_parts(df, id_col, vec_col, tau, k)
+        return base, cands.localCheckpoint(eager=True)
+
+    return _stage_memo("cosine", [df], (id_col, vec_col, tau, k), build)
 
 
 def _cosine_parts(

@@ -41,14 +41,14 @@ def _tokens(d: DataFrame) -> DataFrame:
 def _shingle_sets(d: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shingles array<string>) over the documents fixture —
     thin binding of the column-parameterized public core, routed
-    through the session-memoized checkpoint (api._staged_shingle_sets)
+    through the session-memoized checkpoint (api._staged_sets)
     so it shares the staged corpus index with the minhash family.
     api.shingle_sets carries the short-doc guard rationale; DuckDB's
     range(1, n−k+1) is already empty for n<k, so that guard is what
     keeps the two engines identical on degenerate docs."""
-    from hadoop_deliver_spark.api import _staged_shingle_sets
+    from hadoop_deliver_spark.api import _staged_sets, shingle_sets
 
-    return _staged_shingle_sets(d, "doc_id", "text", k)
+    return _staged_sets(shingle_sets, d, "doc_id", "text", k)
 
 
 _SHINGLE_SET_SQL = """

@@ -32,13 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import dec2, read_parquet, tbl
+from hadoop_deliver_spark.tables import dec2, file_signature, read_parquet, tbl
 
 _STAGE = "/tmp/hds_stage"
 _counter = itertools.count()
 
 def _fixture_tag(sf_dir: str) -> str:
-    """Fingerprint of the fixture generation (name/size/mtime of every
+    """Fingerprint of the fixture generation (name and
+    :func:`~hadoop_deliver_spark.tables.file_signature` of every
     parquet in sf_dir). Baked into the stage path so a driver-side
     fixture regeneration (e.g. the ts dtype change between rounds)
     can never be served a stale staged copy — even mid-process:
@@ -47,8 +48,7 @@ def _fixture_tag(sf_dir: str) -> str:
     on the next call."""
     h = hashlib.sha1(b"stage-format-v2;")  # bump when staged layout/dtypes change
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        st = os.stat(p)
-        h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns};".encode())
+        h.update(f"{os.path.basename(p)}:{file_signature(p)};".encode())
     return h.hexdigest()[:10]
 
 

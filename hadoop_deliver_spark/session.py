@@ -14,40 +14,33 @@ import os
 
 from pyspark.sql import SparkSession
 
+from hadoop_deliver_spark.tables import prepare_session
+
 
 def get_spark(app_name: str = "hadoop-deliver-spark") -> SparkSession:
     """Create (or fetch) the tuned SparkSession.
 
-    Settings rationale (100 TB design notes in README):
-      - AQE on: runtime partition coalescing + skew-join mitigation —
-        at 100 TB the static shuffle-partition count is always wrong
-        for *some* stage; AQE re-plans per-stage.
-      - shuffle.partitions = cores locally; on a real cluster set
-        ~2-3x total executor cores (AQE coalesces the excess).
-      - nanosAsLong: the events fixture stores TIMESTAMP(NANOS) which
-        Spark 4.x cannot read natively (PARQUET_TYPE_ILLEGAL).
-      - session timezone UTC: keeps timestamp semantics identical to
-        the DuckDB oracle (naive µs timestamps).
-      - Arrow enabled: toPandas()/pandas_udf cross the JVM↔Python
-        boundary as Arrow batches, not pickled rows.
+    Only static and builder-only settings live here; the runtime SQL
+    confs (AQE, shuffle partitions, nanosAsLong, UTC session timezone,
+    Arrow transfer) are applied by :func:`tables.prepare_session`,
+    which also runs on driver-owned sessions. Settings rationale
+    (100 TB design notes in README):
+      - default.parallelism = cores locally; on a real cluster set
+        ~2-3x total executor cores.
+      - skewJoin on: AQE splits skewed join partitions at any scale.
+      - 64 MiB broadcast threshold: dimension tables broadcast instead
+        of shuffling the fact side.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.default.parallelism", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.log.level", "ERROR")
     )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return prepare_session(builder.getOrCreate())

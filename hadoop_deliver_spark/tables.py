@@ -97,23 +97,23 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
 
 
-def _stat_sig(st: os.stat_result) -> tuple:
-    # ctime too: os.utime can pin a rewritten file's mtime to its old value.
-    return (st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
-
-
-def _signature(path: str) -> tuple:
-    """Signature of a file, or of every file under a directory.
-    Raises OSError if the path (or a file under it) cannot be stat'ed."""
+def file_signature(path: str) -> tuple:
+    """Size, mtime, ctime and inode of a file, or those of every file
+    under a directory with its relative name. The one staleness rule
+    behind the schema cache, ``api._stage_memo`` keys and staged-copy
+    paths. Raises OSError if the path (or a file under it) cannot be
+    stat'ed."""
     st = os.stat(path)
     if not stat.S_ISDIR(st.st_mode):
-        return _stat_sig(st)
-    sigs = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            p = os.path.join(root, f)
-            sigs.append((os.path.relpath(p, path), *_stat_sig(os.stat(p))))
-    return tuple(sorted(sigs))
+        # ctime too: os.utime can pin a rewritten file's mtime to its old value.
+        return (st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
+    return tuple(
+        sorted(
+            (os.path.relpath(p, path), *file_signature(p))
+            for root, _dirs, files in os.walk(path)
+            for p in (os.path.join(root, f) for f in files)
+        )
+    )
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -140,7 +140,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
     key = os.path.abspath(path)
     try:
-        sig = _signature(key)
+        sig = file_signature(key)
     except OSError:
         return spark.read.parquet(path)
     confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)

@@ -3,12 +3,16 @@
     python3 scripts/ab_bench.py --base <rev> --workload catalog_sweep --pairs 10
     python3 scripts/ab_bench.py --base HEAD~1 --workload bulk_delivery \\
         --pairs 10 --seed 7 --out ab.json
+    python3 scripts/ab_bench.py --base HEAD~1 --pairs 10 \\
+        --workload catalog_sweep,bulk_delivery,corpus_dedup
 
 Exports ``<rev>`` with ``git archive`` into a temporary directory (no
 worktree is registered, so an interrupted run leaves the repository's
 git metadata untouched) and runs ``perfbench/run.py`` from each tree
 in turn: pair ``i`` runs the base first when ``i`` is even and this
-checkout first when it is odd. Both sides get the same workload,
+checkout first when it is odd. A comma-separated ``--workload`` runs
+every pair of one workload before the next, on the one export, and
+prints one table per workload. Both sides get the same workload,
 seed, ``--seconds`` and environment; ``--trace`` is always 0.
 
 For every end-to-end metric named in this checkout's ``BENCHMARK.json``
@@ -88,42 +92,10 @@ def summarize(spec: dict, base: list[float], change: list[float]) -> dict:
     }
 
 
-def main(argv=None) -> int:
-    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("--base", required=True, help="git revision to compare to")
-    p.add_argument("--workload", required=True)
-    p.add_argument("--pairs", type=int, default=10)
-    p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=float, default=5)
-    p.add_argument("--out", help="also write every run and summary as JSON")
-    a = p.parse_args(argv)
-
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        specs = {m["name"]: m for m in json.load(fh)["end_to_end"]}
-
-    runs = {"base": [], "change": []}
-    tmp = tempfile.mkdtemp(prefix="ab_bench_")
-    try:
-        base_tree = os.path.join(tmp, "base")
-        os.makedirs(base_tree)
-        export_rev(a.base, base_tree)
-        trees = {"base": base_tree, "change": ROOT}
-        for i in range(a.pairs):
-            order = ("base", "change") if i % 2 == 0 else ("change", "base")
-            for side in order:
-                t0 = time.time()
-                runs[side].append(
-                    run_bench(trees[side], a.workload, a.seed, a.seconds))
-                print(f"pair {i + 1}/{a.pairs} {side:<6} "
-                      f"{time.time() - t0:5.1f} s  "
-                      + " ".join(f"{k}={v:.4g}"
-                                 for k, v in runs[side][-1].items()),
-                      file=sys.stderr, flush=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
+def report(workload: str, a, specs: dict, runs: dict) -> dict:
+    """Print one workload's table; return its per-metric summary."""
     summary = {}
-    print(f"== {a.workload} seed={a.seed} seconds={a.seconds} "
+    print(f"== {workload} seed={a.seed} seconds={a.seconds} "
           f"pairs={a.pairs} base={a.base}")
     print(f"   {'metric':<12} {'base median [q1, q3]':>30} "
           f"{'change median [q1, q3]':>30} {'gain':>7} {'wins':>6} "
@@ -138,11 +110,54 @@ def main(argv=None) -> int:
               f"{s['rel_gain']:>+7.1%} {s['wins']:>3}/{s['pairs']:<2} "
               f"{'holds' if s['gain_rule'] else 'no':>9} "
               f"{'WORSE' if s['regression'] else 'ok':>9}")
+    return summary
+
+
+def main(argv=None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("--base", required=True, help="git revision to compare to")
+    p.add_argument("--workload", required=True,
+                   help="one workload, or a comma-separated list")
+    p.add_argument("--pairs", type=int, default=10)
+    p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--seconds", type=float, default=5)
+    p.add_argument("--out", help="also write every run and summary as JSON")
+    a = p.parse_args(argv)
+    workloads = a.workload.split(",")
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        specs = {m["name"]: m for m in json.load(fh)["end_to_end"]}
+
+    runs = {w: {"base": [], "change": []} for w in workloads}
+    tmp = tempfile.mkdtemp(prefix="ab_bench_")
+    try:
+        base_tree = os.path.join(tmp, "base")
+        os.makedirs(base_tree)
+        export_rev(a.base, base_tree)
+        trees = {"base": base_tree, "change": ROOT}
+        for w in workloads:
+            for i in range(a.pairs):
+                order = ("base", "change") if i % 2 == 0 else ("change", "base")
+                for side in order:
+                    t0 = time.time()
+                    runs[w][side].append(
+                        run_bench(trees[side], w, a.seed, a.seconds))
+                    print(f"{w} pair {i + 1}/{a.pairs} {side:<6} "
+                          f"{time.time() - t0:5.1f} s  "
+                          + " ".join(f"{k}={v:.4g}"
+                                     for k, v in runs[w][side][-1].items()),
+                          file=sys.stderr, flush=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    summaries = {w: report(w, a, specs, runs[w]) for w in workloads}
     if a.out:
+        common = {"seed": a.seed, "seconds": a.seconds, "base": a.base}
+        out = ({"workload": workloads[0], **common,
+                "metrics": summaries[workloads[0]]} if len(workloads) == 1
+               else {**common, "workloads": summaries})
         with open(a.out, "w") as fh:
-            json.dump({"workload": a.workload, "seed": a.seed,
-                       "seconds": a.seconds, "base": a.base,
-                       "metrics": summary}, fh, indent=1)
+            json.dump(out, fh, indent=1)
     return 0
 
 

@@ -599,33 +599,38 @@ def test_spearman_matches_pandas(spark, sf_dir):
     assert abs(got["rho"] - rho) < 1e-3
 
 
-def test_gram_cache_rekeys_on_file_rewrite(spark, tmp_path):
-    """Round-11 advice regression: the gram-stage memo must NOT serve
-    stale results when the SAME parquet path is rewritten with new
-    contents inside one application. The cache key folds in the
-    source-file listing (parquet rewrites produce fresh UUID part
-    names), so the second read re-keys automatically — no manual
-    clear_stage_caches() needed for the rewrite path."""
-    from hadoop_deliver_spark import api
+@pytest.mark.parametrize("writer", ["spark", "pandas"])
+def test_gram_cache_rekeys_on_file_rewrite(spark, tmp_path, writer):
+    """The stage memo must NOT serve stale results when the SAME
+    parquet path is rewritten with new contents inside one
+    application. The key folds in the file signature of every local
+    input file, so the second read re-keys automatically — both for a
+    Spark rewrite (fresh part-file names) and for a single file
+    rewritten in place under the same name (pandas), where a
+    name-only listing could not tell the two apart."""
+    import pandas as pd
 
     p = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta shared tail piece"),
-         (2, "alpha beta gamma delta shared tail piece x")],
-        "id long, body string",
-    ).write.mode("overwrite").parquet(p)
+
+    def write(rows):
+        if writer == "spark":
+            spark.createDataFrame(rows, "id long, body string").write.mode(
+                "overwrite"
+            ).parquet(p)
+        else:
+            pd.DataFrame(rows, columns=["id", "body"]).to_parquet(p, index=False)
+
+    write([(1, "alpha beta gamma delta shared tail piece"),
+           (2, "alpha beta gamma delta shared tail piece x")])
     first = api.jaccard_pairs(
         spark.read.parquet(p), "id", "body", threshold=0.5
     ).collect()
     assert len(first) == 1  # the two near-identical docs pair up
 
-    # rewrite the same path with DISSIMILAR texts — a stale cache
+    # rewrite the same path with DISSIMILAR texts — a stale memo
     # would still report the old pair
-    spark.createDataFrame(
-        [(1, "completely different words here now okay"),
-         (2, "zzz yyy xxx www vvv uuu ttt sss rrr")],
-        "id long, body string",
-    ).write.mode("overwrite").parquet(p)
+    write([(1, "completely different words here now okay"),
+           (2, "zzz yyy xxx www vvv uuu ttt sss rrr")])
     second = api.jaccard_pairs(
         spark.read.parquet(p), "id", "body", threshold=0.5
     ).collect()
@@ -633,4 +638,37 @@ def test_gram_cache_rekeys_on_file_rewrite(spark, tmp_path):
 
     # the explicit invalidation helper runs clean and empties the memo
     api.clear_stage_caches()
-    assert not api._GRAM_STAGE_CACHE
+    assert not api._STAGE_MEMO
+
+
+def test_operator_memos_rekey_and_clear(spark, sf_dir, tmp_path):
+    """The operator-level stages share the one stage memo: the
+    co-purchase projection re-keys when ``part`` (read only by the
+    brand filter) is rewritten in place, and clear_stage_caches()
+    drops the gram, co-purchase, IVF and component-label entries."""
+    import shutil
+
+    import pandas as pd
+
+    from hadoop_deliver_spark.operators import graph, llm_ivf, llm_text
+    from hadoop_deliver_spark.tables import tbl
+
+    d = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, d)
+    _, pairs = graph.co_purchase_graph(spark, d, brand="Brand#23")
+    assert pairs.count() > 0
+
+    part = pd.read_parquet(f"{d}/part.parquet")
+    part["p_brand"] = part["p_brand"].replace("Brand#23", "Brand#00")
+    part.to_parquet(f"{d}/part.parquet", index=False)
+    _, pairs = graph.co_purchase_graph(spark, d, brand="Brand#23")
+    assert pairs.count() == 0  # no Brand#23 part left: no stale pairs
+
+    docs = tbl(spark, d, "documents")
+    api.jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
+    llm_ivf._ivf_top3(spark, d)
+    llm_text._cc_labels(spark, d)
+    tags = {key[0] for key in api._STAGE_MEMO}
+    assert {"char_gram_sets", "co_purchase", "ivf_top3", "cc_labels"} <= tags
+    api.clear_stage_caches()
+    assert not api._STAGE_MEMO
