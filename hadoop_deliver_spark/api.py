@@ -2733,8 +2733,9 @@ def write_avro(
     partition to one container file via the engine codec (mapInPandas
     — no driver-side funnel; at 100 TB this is N writer tasks exactly
     like any parquet sink). Returns the (path, n) manifest DataFrame —
-    the CALLER owns the commit protocol (count-check then _SUCCESS, or
-    Spark's FileCommitProtocol in production). ``out_dir`` must exist.
+    the CALLER owns the commit protocol (count-check, then rename the
+    written directory into place, or Spark's FileCommitProtocol in
+    production). ``out_dir`` must exist.
 
     >>> manifest = write_avro(df.repartition(64), "/data/out", schema)
     >>> assert manifest.agg(F.sum("n")).collect()[0][0] == df.count()

@@ -224,7 +224,8 @@ def read_container(raw: bytes) -> tuple[dict, list[dict]]:
     refinement; delivery-genre avro is many modest files, where
     per-file parallelism is already the production shape.)"""
     buf = io.BytesIO(raw)
-    assert buf.read(4) == MAGIC, "not an avro object container file"
+    if buf.read(4) != MAGIC:
+        raise ValueError("not an avro object container file")
     meta: dict[str, bytes] = {}
     while True:
         n = read_long(buf)
@@ -255,5 +256,6 @@ def read_container(raw: bytes) -> tuple[dict, list[dict]]:
         body = io.BytesIO(data)
         for _ in range(count):
             rows.append(_decode(body, schema))
-        assert buf.read(16) == sync, "sync marker mismatch (corrupt block)"
+        if buf.read(16) != sync:
+            raise ValueError("sync marker mismatch (corrupt block)")
     return schema, rows

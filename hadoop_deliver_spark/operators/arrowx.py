@@ -17,7 +17,6 @@ the Python kernels are arithmetic the oracle can mirror.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -26,7 +25,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_deliver_spark.operators.sources import _stage_dir
+from hadoop_deliver_spark.operators.sources import staged
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -155,10 +154,11 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matching the oracle proves the codec roundtrip lossless for
     int/string columns. Distributed on both sides: every task writes
     its own .json.gz part, the re-scan shards by file."""
-    n = tbl(spark, sf_dir, "nation")
-    out = _stage_dir(sf_dir, "nation_jsonl")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        n.write.mode("overwrite").option("compression", "gzip").json(out)
+    out = staged(
+        sf_dir,
+        "nation_jsonl",
+        lambda tmp: tbl(spark, sf_dir, "nation").write.json(tmp, compression="gzip"),
+    )
     back = spark.read.json(out)
     return (
         back.groupBy(F.col("n_regionkey").cast("int").alias("n_regionkey"))

@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_deliver_spark.operators.sources import _stage_dir
+from hadoop_deliver_spark.operators.sources import staged
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -272,16 +272,15 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is restated as a string-stable DATE from ts on both
     sides, so the staged layout is invisible to the result."""
     e = tbl(spark, sf_dir, "events")
-    root = _stage_dir(sf_dir, "events_tree")
-    if not os.path.exists(os.path.join(root, "_STAGED")):
+
+    def write_day_dirs(tmp: str) -> None:
         days = [r[0] for r in e.select(F.to_date("ts").alias("d")).distinct().collect()]
         for d in days:
-            (
-                e.where(F.to_date("ts") == F.lit(d))
-                .write.mode("overwrite")
-                .parquet(os.path.join(root, f"{d.year:04d}/{d.month:02d}/{d.day:02d}"))
+            e.where(F.to_date("ts") == F.lit(d)).write.parquet(
+                os.path.join(tmp, f"{d.year:04d}/{d.month:02d}/{d.day:02d}")
             )
-        open(os.path.join(root, "_STAGED"), "w").close()
+
+    root = staged(sf_dir, "events_tree", write_day_dirs)
     scan = (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.parquet")

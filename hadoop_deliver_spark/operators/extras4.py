@@ -144,8 +144,7 @@ def scan_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-encode to parquet on ingest like sink_parquet_zstd. The
     oracle rebuilds the tricky strings from first principles; the
     staged file is re-written per fixture generation."""
-    from hadoop_deliver_spark.operators.sources import _stage_dir
-    import os
+    from hadoop_deliver_spark.operators.sources import staged
 
     p = tbl(spark, sf_dir, "part")
     tricky = p.select(
@@ -155,15 +154,11 @@ def scan_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(', "q"uote"\nline2\\tab'),
         ).alias("tricky"),
     )
-    path = _stage_dir(sf_dir, "part_csv_hostile")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            tricky.write.mode("overwrite")
-            .option("header", True)
-            .option("quote", '"')
-            .option("escape", '"')
-            .csv(path)
-        )
+    path = staged(
+        sf_dir,
+        "part_csv_hostile",
+        lambda tmp: tricky.write.csv(tmp, header=True, quote='"', escape='"'),
+    )
     return (
         spark.read.schema("p_partkey BIGINT, tricky STRING")
         .option("header", True)

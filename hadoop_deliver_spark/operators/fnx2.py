@@ -26,8 +26,6 @@ hints, range-partitioned delivery.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -254,17 +252,16 @@ def sink_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant from the parquet footers (min/max per file) and raises
     on violation; the hashed read-back aggregate proves no row was
     lost or duplicated."""
-    from hadoop_deliver_spark.operators.sources import _stage_dir
+    from hadoop_deliver_spark.operators.sources import staged
 
-    o = tbl(spark, sf_dir, "orders")
-    out = _stage_dir(sf_dir, "orders_range_parted")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            o.repartitionByRange(8, F.col("o_orderkey"))
-            .sortWithinPartitions("o_orderkey")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+    out = staged(
+        sf_dir,
+        "orders_range_parted",
+        lambda tmp: tbl(spark, sf_dir, "orders")
+        .repartitionByRange(8, F.col("o_orderkey"))
+        .sortWithinPartitions("o_orderkey")
+        .write.parquet(tmp),
+    )
     back = spark.read.parquet(out)
     # disjointness check from footer stats via the _metadata column
     ranges = (

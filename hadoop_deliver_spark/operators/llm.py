@@ -501,11 +501,9 @@ def llm_lang_filter_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets partition pruning for free), then read the delivery back and
     aggregate it — checking the route actually delivered exactly the
     filtered corpus."""
-    import os
+    from hadoop_deliver_spark.operators.sources import scratch
 
-    from hadoop_deliver_spark.operators.sources import _stage_dir
-
-    out = _stage_dir(sf_dir, "docs_by_lang")
+    out = scratch(sf_dir, "docs_by_lang")
     d = tbl(spark, sf_dir, "documents").filter(
         F.col("lang").isin("en", "de", "fr")
     )

@@ -19,12 +19,10 @@ contracts, abuse heuristics, fuzzy reconciliation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_deliver_spark.operators.sources import _stage_dir
+from hadoop_deliver_spark.operators.sources import staged
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -68,9 +66,7 @@ def scan_kv_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    out = _stage_dir(sf_dir, "events_kv_tsv")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        packed.write.mode("overwrite").text(out)
+    out = staged(sf_dir, "events_kv_tsv", lambda tmp: packed.write.text(tmp))
     lines = spark.read.text(out)
     kv = F.split(F.col("value"), "\t")
     fields = F.split(kv.getItem(1), ";")

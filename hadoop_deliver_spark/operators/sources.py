@@ -1,12 +1,17 @@
 """§2.A — Scans / sources / sinks.
 
 The driver fixtures are parquet-only, so the CSV/JSON/text/ORC scans
-read one-time stagings of those fixtures under ``/tmp/hds_stage/<sf>``
-(created lazily, reused across calls). Every oracle reads the
-ORIGINAL table view instead of the staged file — the staged artifact
-is byte-equivalent by construction, so the parity check verifies
-exactly what a scan operator must guarantee: the engine reads back
-precisely the rows that were written, whatever the format.
+read copies of those fixtures staged once per fixture generation
+under ``/tmp/hds_stage/<sf>-<tag>/`` by :func:`staged`, which writes
+each copy beside its final path and renames it into place: a copy is
+complete once its directory exists, and concurrent processes share
+it. Per-call directories (streaming checkpoints, sink outputs, state)
+come from :func:`scratch`, private to the process and removed at
+exit. Every oracle reads the ORIGINAL table view instead of the
+staged file — the staged artifact is byte-equivalent by construction,
+so the parity check verifies exactly what a scan operator must
+guarantee: the engine reads back precisely the rows that were
+written, whatever the format.
 
 Sinks re-read their own output and surface its content (or a content
 aggregate) so the same write→read roundtrip contract is hash-checked.
@@ -22,11 +27,14 @@ the reference genre's single-file `getmerge` delivery step.
 
 from __future__ import annotations
 
+import atexit
 import glob
 import hashlib
-import itertools
 import os
 import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +43,6 @@ from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import dec2, file_signature, read_parquet, tbl
 
 _STAGE = "/tmp/hds_stage"
-_counter = itertools.count()
 
 def _fixture_tag(sf_dir: str) -> str:
     """Fingerprint of the fixture generation (name and
@@ -46,7 +53,7 @@ def _fixture_tag(sf_dir: str) -> str:
     deliberately NOT cached (the stat loop is ~10 files, trivially
     cheap), so a regeneration during a long-lived driver is picked up
     on the next call."""
-    h = hashlib.sha1(b"stage-format-v2;")  # bump when staged layout/dtypes change
+    h = hashlib.sha1(b"stage-format-v3;")  # bump when staged layout/dtypes/commit change
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         h.update(f"{os.path.basename(p)}:{file_signature(p)};".encode())
     return h.hexdigest()[:10]
@@ -57,11 +64,53 @@ def _stage_dir(sf_dir: str, leaf: str) -> str:
     return os.path.join(_STAGE, f"{tag}-{_fixture_tag(sf_dir)}", leaf)
 
 
-def _ensure_staged(df: DataFrame, path: str, fmt: str, **options) -> str:
-    """Write ``df`` to ``path`` in ``fmt`` once; reuse afterwards."""
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df.write.mode("overwrite").options(**options).format(fmt).save(path)
-    return path
+def staged(sf_dir: str, leaf: str, write: Callable[[str], object]) -> str:
+    """Path of the shared staged copy ``leaf`` of the fixtures in
+    ``sf_dir``, written by ``write(tmp)`` the first time.
+
+    ``write`` fills the private sibling ``<final>.tmp-<pid>-<uuid>``
+    (all parts of a multi-part copy go under it), which is then
+    renamed to the final path. So the copy is complete once its
+    directory exists; a crash or a raising ``write`` leaves at most a
+    ``.tmp-*`` directory that no reader opens. When another process
+    renamed its copy first, the rename fails on the non-empty target
+    and this process discards its own copy and uses the winner's."""
+    final = _stage_dir(sf_dir, leaf)
+    if os.path.exists(final):
+        return final
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    tmp = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex}"
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, final)
+        except OSError:
+            if not os.path.isdir(final):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return final
+
+
+_SCRATCH: dict[str, str] = {}  # stage root -> this process's scratch dir
+
+
+def scratch(sf_dir: str, leaf: str) -> str:
+    """A fresh, empty directory named ``<leaf>_<random>`` for one
+    call's checkpoint, sink output or state. It lives under one
+    directory per process and stage root, made on first use and
+    removed when the process exits, so two processes never share a
+    path and per-call directories do not outlive their process."""
+    root = _SCRATCH.get(_STAGE)
+    if root is None:
+        os.makedirs(_STAGE, exist_ok=True)
+        root = _SCRATCH[_STAGE] = tempfile.mkdtemp(
+            prefix=f"scratch-{os.getpid()}-", dir=_STAGE
+        )
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    parent = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
+    os.makedirs(parent, exist_ok=True)
+    return tempfile.mkdtemp(prefix=f"{leaf}_", dir=parent)
 
 
 @register(
@@ -92,11 +141,10 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip must reproduce the table bit-exactly (doubles survive via
     shortest-repr formatting on write and nearest-double parse on
     read)."""
-    path = _ensure_staged(
-        tbl(spark, sf_dir, "customer"),
-        _stage_dir(sf_dir, "customer_csv"),
-        "csv",
-        header=True,
+    path = staged(
+        sf_dir,
+        "customer_csv",
+        lambda tmp: tbl(spark, sf_dir, "customer").write.csv(tmp, header=True),
     )
     schema = (
         "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
@@ -109,8 +157,8 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines scan with explicit schema (the schema-on-read model
     of the reference genre, minus the per-job parsing code)."""
-    path = _ensure_staged(
-        tbl(spark, sf_dir, "nation"), _stage_dir(sf_dir, "nation_json"), "json"
+    path = staged(
+        sf_dir, "nation_json", lambda tmp: tbl(spark, sf_dir, "nation").write.json(tmp)
     )
     return spark.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(
         path
@@ -130,10 +178,10 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw line scan (the Hadoop Streaming input model): one string
     column named `value`, one row per line."""
-    path = _ensure_staged(
-        tbl(spark, sf_dir, "documents").select("text"),
-        _stage_dir(sf_dir, "documents_text"),
-        "text",
+    path = staged(
+        sf_dir,
+        "documents_text",
+        lambda tmp: tbl(spark, sf_dir, "documents").select("text").write.text(tmp),
     )
     lines = spark.read.text(path)
     return lines.agg(
@@ -157,8 +205,8 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC scan (DuckDB cannot read ORC, so the oracle reads the
     parquet original — same rows by construction)."""
-    path = _ensure_staged(
-        tbl(spark, sf_dir, "lineitem"), _stage_dir(sf_dir, "lineitem_orc"), "orc"
+    path = staged(
+        sf_dir, "lineitem_orc", lambda tmp: tbl(spark, sf_dir, "lineitem").write.orc(tmp)
     )
     return (
         spark.read.orc(path)
@@ -188,7 +236,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     one directory per key, partition pruning for every later reader),
     then a read-back aggregate over the partition column — which never
     touches the data files, only directory names + footers."""
-    out = _stage_dir(sf_dir, "orders_by_status")
+    out = scratch(sf_dir, "orders_by_status")
     tbl(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(out)
@@ -209,7 +257,7 @@ def sink_csv_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce(1) forces one output file — correct only for small final
     results; a 100 TB delivery keeps N files and merges at the
     consumer."""
-    out = _stage_dir(sf_dir, "region_csv_single")
+    out = scratch(sf_dir, "region_csv_single")
     tbl(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").option(
         "header", True
     ).csv(out)
@@ -232,10 +280,9 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key at write time so later joins/aggs on c_nationkey read
     co-located buckets with no exchange — the 100 TB answer to a
     repeatedly-joined dimension key."""
-    out = _stage_dir(sf_dir, "customer_bucketed")
+    out = scratch(sf_dir, "customer_bucketed")
     name = "hds_customer_bucketed"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(out, ignore_errors=True)
     (
         tbl(spark, sf_dir, "customer")
         .write.bucketBy(4, "c_nationkey")
@@ -261,10 +308,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one once — through the batch loader, so ts is already a
     normalized timestamp whatever the fixture generation — and read
     back with the staged files' own schema."""
-    stage = _ensure_staged(
-        tbl(spark, sf_dir, "events"),
-        _stage_dir(sf_dir, "events_stream_src"),
-        "parquet",
+    stage = staged(
+        sf_dir,
+        "events_stream_src",
+        lambda tmp: tbl(spark, sf_dir, "events").write.parquet(tmp),
     )
     schema = read_parquet(spark, stage).schema
     return spark.readStream.schema(schema).format("parquet").load(stage)
@@ -285,10 +332,8 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops — finite, deterministic, and identical to the batch answer
     (the streaming-vs-batch equivalence that anchors all §2.I checks).
     Memory sink is test-only; production path is toTable/parquet."""
-    n = next(_counter)
-    qname = f"hds_src_stream_{n}"
-    cp = _stage_dir(sf_dir, f"cp_src_{n}")
-    shutil.rmtree(cp, ignore_errors=True)
+    cp = scratch(sf_dir, "hds_src_stream")
+    qname = os.path.basename(cp)
     agg = _events_stream(spark, sf_dir).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(dec2("value")).cast("double").cast("float").alias("total_value"),
@@ -320,11 +365,8 @@ def sink_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory with exactly-once file commits (checkpointed), then
     read the sink back and aggregate — write path is the scalable
     append-only delivery pattern."""
-    n = next(_counter)
-    out = _stage_dir(sf_dir, f"purchases_sink_{n}")
-    cp = _stage_dir(sf_dir, f"cp_sink_{n}")
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(cp, ignore_errors=True)
+    out = scratch(sf_dir, "purchases_sink")
+    cp = scratch(sf_dir, "cp_sink")
     filtered = _events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     )
@@ -363,19 +405,21 @@ def sink_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the fact side is the
-    status-partitioned parquet layout (from sink_parquet_partitioned)
-    joined to a filtered dimension-like subquery on the partition
-    column. Catalyst injects a runtime subquery filter
+    status-partitioned parquet layout (staged once, as
+    sink_parquet_partitioned writes it) joined to a filtered
+    dimension-like subquery on the partition column. Catalyst injects a runtime subquery filter
     (`dynamicpruning` in the plan) so only the F and P partition
     directories are read — at 100 TB this is the difference between
     scanning 2 of 3 status partitions and scanning the table. The
     static-pruning case (a literal partition predicate in PushedFilters)
     falls out of the same layout for free."""
-    out = _stage_dir(sf_dir, "orders_by_status")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        tbl(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-            "o_orderstatus"
-        ).parquet(out)
+    out = staged(
+        sf_dir,
+        "orders_by_status",
+        lambda tmp: tbl(spark, sf_dir, "orders")
+        .write.partitionBy("o_orderstatus")
+        .parquet(tmp),
+    )
     fact = spark.read.parquet(out)
     dim = (
         fact.select("o_orderstatus")
@@ -404,12 +448,12 @@ def scan_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts shard into many files (or recompress to zstd/parquet on
     ingest, see sink_parquet_zstd); the fixture staging mirrors that
     by writing one shard per input partition."""
-    path = _ensure_staged(
-        tbl(spark, sf_dir, "supplier"),
-        _stage_dir(sf_dir, "supplier_csv_gz"),
-        "csv",
-        header=True,
-        compression="gzip",
+    path = staged(
+        sf_dir,
+        "supplier_csv_gz",
+        lambda tmp: tbl(spark, sf_dir, "supplier").write.csv(
+            tmp, header=True, compression="gzip"
+        ),
     )
     schema = (
         "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
@@ -432,7 +476,7 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios at much faster decode). The query re-reads its own output
     and aggregates, proving the codec roundtrip; the write itself is
     embarrassingly parallel (per-partition files, no shuffle)."""
-    out = _stage_dir(sf_dir, "orders_zstd")
+    out = scratch(sf_dir, "orders_zstd")
     (
         tbl(spark, sf_dir, "orders")
         .write.mode("overwrite")
@@ -469,20 +513,19 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-history, partitions never rewritten). The merge cost is
     footer-only; data pages are untouched. The aggregate groups by the
     evolved column to prove old/new rows coexist in one scan."""
-    out = _stage_dir(sf_dir, "orders_evolved")
-    if not os.path.exists(os.path.join(out, "v2", "_SUCCESS")):
+
+    def write(tmp: str) -> None:
         orders = tbl(spark, sf_dir, "orders")
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 0)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, "v1"))
+        orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(
+            os.path.join(tmp, "v1")
         )
         (
             orders.filter(F.col("o_orderkey") % 2 == 1)
             .withColumn("o_channel", F.substring("o_orderpriority", 1, 1))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, "v2"))
+            .write.parquet(os.path.join(tmp, "v2"))
         )
+
+    out = staged(sf_dir, "orders_evolved", write)
     evolved = (
         spark.read.option("mergeSchema", True)
         .parquet(os.path.join(out, "v1"), os.path.join(out, "v2"))
@@ -524,10 +567,11 @@ def join_bucketed_noshuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         (oname, "orders", "o_orderkey", "o_orderkey"),
         (lname, "lineitem", "l_orderkey", "l_orderkey"),
     ]:
-        out = _stage_dir(sf_dir, f"{table}_bkt")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(out, ignore_errors=True)
+
+        def write(tmp: str) -> None:
+            # saveAsTable records ``tmp`` as the table's location, so
+            # it goes under a throwaway name dropped before the rename.
+            staging = f"hds_stage_{uuid.uuid4().hex}"
             (
                 # repartition on the bucket key with the bucket count
                 # (same Murmur3 hash both places) → each task owns
@@ -538,26 +582,28 @@ def join_bucketed_noshuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .repartition(8, F.col(key))
                 .write.bucketBy(8, key)
                 .sortBy(sort)
-                .option("path", out)
-                .saveAsTable(name)
+                .option("path", tmp)
+                .saveAsTable(staging)
             )
-        elif name not in [t.name for t in spark.catalog.listTables()]:
-            # Staged files survive but the in-memory catalog is fresh
-            # (new session): re-register by DDL ONLY — no data write.
-            # (A mode('ignore') saveAsTable here still executes the
-            # CTAS write on pyspark 4.1.2, and without the repartition
-            # above it doubles the part files, breaking the
-            # one-file-per-bucket layout the no-Sort plan relies on.)
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            schema_ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(out).schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {name} ({schema_ddl}) USING parquet "
-                f"CLUSTERED BY ({key}) SORTED BY ({sort}) INTO 8 BUCKETS "
-                f"LOCATION '{out}'"
-            )
+            spark.sql(f"DROP TABLE {staging}")
+
+        out = staged(sf_dir, f"{table}_bkt", write)
+        # Register the staged files by DDL ONLY — no data write — on
+        # every call, so the table always points at this stage root.
+        # (A mode('ignore') saveAsTable here still executes the CTAS
+        # write on pyspark 4.1.2, and without the repartition above it
+        # doubles the part files, breaking the one-file-per-bucket
+        # layout the no-Sort plan relies on.)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        schema_ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in read_parquet(spark, out).schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE {name} ({schema_ddl}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({sort}) INTO 8 BUCKETS "
+            f"LOCATION '{out}'"
+        )
     o = spark.table(oname)
     li = spark.table(lname)
     # merge hint: at fixture scale the planner would broadcast the
@@ -586,12 +632,12 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip like scan_csv/scan_json. (Avro — the other legacy-feed
     format — is covered by scan_avro below via the engine's own
     container codec, since this runtime lacks the spark-avro jar.)"""
-    path = _ensure_staged(
-        tbl(spark, sf_dir, "nation"),
-        _stage_dir(sf_dir, "nation_xml"),
-        "xml",
-        rootTag="nations",
-        rowTag="nation",
+    path = staged(
+        sf_dir,
+        "nation_xml",
+        lambda tmp: tbl(spark, sf_dir, "nation").write.xml(
+            tmp, rootTag="nations", rowTag="nation"
+        ),
     )
     return (
         spark.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT")
@@ -616,6 +662,17 @@ _AVRO_NATION_SCHEMA = {
 from hadoop_deliver_spark.api import read_avro, write_avro  # noqa: E402
 
 
+def _write_avro_checked(src: DataFrame, out: str, avro_schema: dict) -> None:
+    """Write ``src`` as Avro containers into the new directory ``out``
+    and raise before the caller commits it if the write job's row
+    count differs from ``src``'s."""
+    os.makedirs(out)
+    written = write_avro(src, out, avro_schema)
+    total, want = written.agg(F.sum("n")).collect()[0][0], src.count()
+    if total != want:
+        raise RuntimeError(f"avro sink lost rows: wrote {total} of {want}")
+
+
 @register("scan_avro", "SELECT * FROM nation")
 def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro scan WITHOUT the spark-avro data source (absent from this
@@ -631,9 +688,8 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     core: api.read_avro (reusable on any container directory)."""
     from hadoop_deliver_spark.avro_io import write_container
 
-    out = _stage_dir(sf_dir, "nation_avro")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        os.makedirs(out, exist_ok=True)
+    def write_two_files(tmp: str) -> None:
+        os.makedirs(tmp)
         rows = [
             r.asDict()
             for r in tbl(spark, sf_dir, "nation")
@@ -643,13 +699,13 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         half = (len(rows) + 1) // 2
         for i, chunk in enumerate((rows[:half], rows[half:])):
             write_container(
-                os.path.join(out, f"part-{i:05d}.avro"),
+                os.path.join(tmp, f"part-{i:05d}.avro"),
                 _AVRO_NATION_SCHEMA,
                 chunk,
                 codec="deflate",
             )
-        open(os.path.join(out, "_SUCCESS"), "w").close()
 
+    out = staged(sf_dir, "nation_avro", write_two_files)
     return read_avro(
         spark, out, "n_nationkey INT, n_name STRING, n_regionkey INT"
     )
@@ -671,25 +727,22 @@ def sink_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the scan path and an aggregate over the re-read rows is
     hash-checked against the original table — the same write→read
     roundtrip contract every other sink in this module proves. Each
-    task writes a uniquely-named file and the _SUCCESS marker lands
-    only after the write job's row count is verified (a production
-    deployment would swap this manual commit for Spark's
-    FileCommitProtocol to also survive speculative re-execution).
-    Write/scan cores: api.write_avro / api.read_avro."""
-    out = _stage_dir(sf_dir, "nation_avro_sink")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-        src = (
+    task writes a uniquely-named file into a staging directory that
+    is renamed into place only after the write job's row count is
+    verified (a production deployment would swap this manual commit
+    for Spark's FileCommitProtocol to also survive speculative
+    re-execution). Write/scan cores: api.write_avro / api.read_avro."""
+    out = staged(
+        sf_dir,
+        "nation_avro_sink",
+        lambda tmp: _write_avro_checked(
             tbl(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
-            .repartition(4, F.col("n_regionkey"))
-        )
-        written = write_avro(src, out, _AVRO_NATION_SCHEMA)
-        total = written.agg(F.sum("n")).collect()[0][0]
-        assert total == src.count(), "avro sink lost rows"
-        open(os.path.join(out, "_SUCCESS"), "w").close()
-
+            .repartition(4, F.col("n_regionkey")),
+            tmp,
+            _AVRO_NATION_SCHEMA,
+        ),
+    )
     back = read_avro(
         spark, out, "n_nationkey INT, n_name STRING, n_regionkey INT"
     )
@@ -729,18 +782,18 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescue column is per-row map-side state; quarantine the bad rows
     by filtering `_corrupt_record IS NOT NULL` to a side sink and the
     good path stays a clean columnar scan."""
-    out = _stage_dir(sf_dir, "nation_json_corrupt")
-    if not os.path.exists(os.path.join(out, "_marker")):
-        os.makedirs(out, exist_ok=True)
+
+    def write_feed(tmp: str) -> None:
+        import json as _json
+
+        os.makedirs(tmp)
         rows = (
             tbl(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
             .orderBy("n_nationkey")
             .collect()
         )
-        import json as _json
-
-        with open(os.path.join(out, "part-00000.json"), "w") as f:
+        with open(os.path.join(tmp, "part-00000.json"), "w") as f:
             for r in rows:
                 line = _json.dumps(
                     {
@@ -752,7 +805,8 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if r.n_nationkey % 5 == 2:
                     line = line[: len(line) // 2]  # truncate mid-record
                 f.write(line + "\n")
-        open(os.path.join(out, "_marker"), "w").close()
+
+    out = staged(sf_dir, "nation_json_corrupt", write_feed)
     parsed = (
         spark.read.schema(
             "n_nationkey INT, n_name STRING, n_regionkey INT, "
@@ -808,11 +862,10 @@ def sink_avro_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     written. Same distributed shape as sink_avro: one container file
     per task, row-count-verified manual commit, scan via binaryFile +
     mapInPandas (api.write_avro / api.read_avro)."""
-    out = _stage_dir(sf_dir, "events_avro_sink")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-        src = (
+    out = staged(
+        sf_dir,
+        "events_avro_sink",
+        lambda tmp: _write_avro_checked(
             tbl(spark, sf_dir, "events")
             .filter(F.col("user_id") % 20 == 0)
             .select(
@@ -822,13 +875,11 @@ def sink_avro_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 "value",
             )
-            .repartition(4, F.col("user_id"))
-        )
-        written = write_avro(src, out, _AVRO_EVENTS_SCHEMA)
-        total = written.agg(F.sum("n")).collect()[0][0]
-        assert total == src.count(), "avro events sink lost rows"
-        open(os.path.join(out, "_SUCCESS"), "w").close()
-
+            .repartition(4, F.col("user_id")),
+            tmp,
+            _AVRO_EVENTS_SCHEMA,
+        ),
+    )
     back = read_avro(
         spark,
         out,
@@ -868,12 +919,12 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted output, proving the rewrite lost nothing. At scale the
     target partition count comes from bytes/128MB, the rewrite runs
     per partition-directory, and the swap is an atomic rename."""
-    small = _stage_dir(sf_dir, "orders_small_files")
-    if not os.path.exists(os.path.join(small, "_SUCCESS")):
-        tbl(spark, sf_dir, "orders").repartition(16).write.mode(
-            "overwrite"
-        ).parquet(small)
-    compacted = _stage_dir(sf_dir, "orders_compacted")
+    small = staged(
+        sf_dir,
+        "orders_small_files",
+        lambda tmp: tbl(spark, sf_dir, "orders").repartition(16).write.parquet(tmp),
+    )
+    compacted = scratch(sf_dir, "orders_compacted")
     spark.read.parquet(small).repartition(2).write.mode("overwrite").parquet(
         compacted
     )
@@ -916,7 +967,7 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     empty them). The conf is saved/restored — the write executes
     eagerly inside this function, so restore-before-return is safe
     here, unlike plan-affecting confs on lazily-collected queries."""
-    base = _stage_dir(sf_dir, f"orders_dyn_overwrite_{next(_counter)}")
+    base = scratch(sf_dir, "orders_dyn_overwrite")
     orders = tbl(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -968,18 +1019,17 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At 100 TB this scan parallelizes per FILE (each blob is
     one task's row) — decode then happens batch-wise in
     llm_multimodal_decode's mapInPandas stage."""
-    d = tbl(spark, sf_dir, "documents")
-    base = _stage_dir(sf_dir, "documents_blobs")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        (
-            d.select("lang", "doc_id", "text")
-            .repartition(F.col("lang"))
-            .sortWithinPartitions("lang", "doc_id")
-            .drop("doc_id")  # narrow projection: partition order kept
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .text(base)
-        )
+    base = staged(
+        sf_dir,
+        "documents_blobs",
+        lambda tmp: tbl(spark, sf_dir, "documents")
+        .select("lang", "doc_id", "text")
+        .repartition(F.col("lang"))
+        .sortWithinPartitions("lang", "doc_id")
+        .drop("doc_id")  # narrow projection: partition order kept
+        .write.partitionBy("lang")
+        .text(tmp),
+    )
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "part-*")

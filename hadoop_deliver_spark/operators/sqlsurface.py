@@ -86,17 +86,16 @@ def sql_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined content. The table lives at an explicit staged LOCATION
     (not the default warehouse): a fresh session's catalog does not
     know about a prior run's managed directory, and CTAS refuses a
-    location that already exists — so the location is owned and
-    cleared here, never inherited."""
-    import shutil
+    location that already exists — so every call gets a fresh scratch
+    location, never an inherited one."""
+    import os
 
-    from hadoop_deliver_spark.operators.sources import _stage_dir
+    from hadoop_deliver_spark.operators.sources import scratch
 
     tbl(spark, sf_dir, "nation").createOrReplaceTempView("hds_nation_v")
     name = "hds_ctas_demo"
-    loc = _stage_dir(sf_dir, "ctas_demo")
+    loc = os.path.join(scratch(sf_dir, "ctas_demo"), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(loc, ignore_errors=True)
     spark.sql(
         f"""
         CREATE TABLE {name} USING parquet LOCATION '{loc}' AS

@@ -37,23 +37,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import dec2, read_parquet
-from hadoop_deliver_spark.operators.sources import (
-    _counter,
-    _ensure_staged,
-    _events_stream,
-    _stage_dir,
-)
+from hadoop_deliver_spark.tables import dec2, read_parquet, tbl
+from hadoop_deliver_spark.operators.sources import _events_stream, scratch, staged
 
 
 def _run_to_memory(stream_df: DataFrame, spark: SparkSession, sf_dir: str,
                    mode: str) -> DataFrame:
     """Run a streaming DF to completion into a memory sink, return the
     collected result as a batch DataFrame."""
-    n = next(_counter)
-    qname = f"hds_stream_{n}"
-    cp = _stage_dir(sf_dir, f"cp_stream_{n}")
-    shutil.rmtree(cp, ignore_errors=True)
+    cp = scratch(sf_dir, "hds_stream")
+    qname = os.path.basename(cp)
     q = (
         stream_df.writeStream.format("memory")
         .queryName(qname)
@@ -398,37 +391,46 @@ def _two_batch_staging(spark: SparkSession, sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    out = _stage_dir(sf_dir, "events_two_batches")
-    a_path = os.path.join(out, "a_main.parquet")
-    b_path = os.path.join(out, "b_late.parquet")
-    if os.path.exists(b_path):
-        return out
-    os.makedirs(out, exist_ok=True)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    if pa.types.is_integer(t["ts"].type):
-        # Legacy fixture generation: int64 ns → µs-truncated timestamp
-        # (newer generations store timestamp[us] directly).
-        ts_us = pc.cast(pc.divide(t["ts"], 1000), pa.timestamp("us"))
-        t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
-    # Write UTC-adjusted timestamps so Spark decodes TimestampType
-    # (LTZ) — naive µs would come back NTZ, which watermarks reject.
-    ts_utc = pc.assume_timezone(
-        pc.cast(t["ts"], pa.timestamp("us")), "UTC"
-    ) if t["ts"].type.tz is None else pc.cast(t["ts"], pa.timestamp("us", "UTC"))
-    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_utc)
-    cutoff = pa.scalar(datetime(2024, 1, 8, tzinfo=timezone.utc),
-                       pa.timestamp("us", "UTC"))
-    held_back = pc.and_(
-        pc.less(t["ts"], cutoff),
-        pc.equal(pc.bit_wise_and(t["event_id"], pa.scalar(3, pa.int64())),
-                 pa.scalar(0, pa.int64())),
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        a_path = os.path.join(tmp, "a_main.parquet")
+        b_path = os.path.join(tmp, "b_late.parquet")
+        t = pq.read_table(f"{sf_dir}/events.parquet")
+        if pa.types.is_integer(t["ts"].type):
+            # Legacy fixture generation: int64 ns → µs-truncated timestamp
+            # (newer generations store timestamp[us] directly).
+            ts_us = pc.cast(pc.divide(t["ts"], 1000), pa.timestamp("us"))
+            t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
+        # Write UTC-adjusted timestamps so Spark decodes TimestampType
+        # (LTZ) — naive µs would come back NTZ, which watermarks reject.
+        ts_utc = pc.assume_timezone(
+            pc.cast(t["ts"], pa.timestamp("us")), "UTC"
+        ) if t["ts"].type.tz is None else pc.cast(t["ts"], pa.timestamp("us", "UTC"))
+        t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_utc)
+        cutoff = pa.scalar(datetime(2024, 1, 8, tzinfo=timezone.utc),
+                           pa.timestamp("us", "UTC"))
+        held_back = pc.and_(
+            pc.less(t["ts"], cutoff),
+            pc.equal(pc.bit_wise_and(t["event_id"], pa.scalar(3, pa.int64())),
+                     pa.scalar(0, pa.int64())),
+        )
+        pq.write_table(t.filter(pc.invert(held_back)), a_path)
+        pq.write_table(t.filter(held_back), b_path)
+        now = os.path.getmtime(b_path)
+        os.utime(a_path, (now - 10, now - 10))
+        os.utime(b_path, (now, now))
+
+    return staged(sf_dir, "events_two_batches", write)
+
+
+def _events_four_files(spark: SparkSession, sf_dir: str) -> str:
+    """Events staged as 4 parquet files, so a file source with
+    maxFilesPerTrigger=1 or a growing source dir sees 4 installments."""
+    return staged(
+        sf_dir,
+        "events_stream_src4",
+        lambda tmp: tbl(spark, sf_dir, "events").repartition(4).write.parquet(tmp),
     )
-    pq.write_table(t.filter(pc.invert(held_back)), a_path)
-    pq.write_table(t.filter(held_back), b_path)
-    now = os.path.getmtime(b_path)
-    os.utime(a_path, (now - 10, now - 10))
-    os.utime(b_path, (now, now))
-    return out
 
 
 @register(
@@ -469,15 +471,11 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_deliver_spark.tables import prepare_session
 
     prepare_session(spark)
-    staged = _two_batch_staging(spark, sf_dir)
-    n = next(_counter)
-    src = _stage_dir(sf_dir, f"late_src_{n}")
-    cp = _stage_dir(sf_dir, f"late_cp_{n}")
-    out = _stage_dir(sf_dir, f"late_out_{n}")
-    for d in (src, cp, out):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(src)
-    schema = read_parquet(spark, os.path.join(staged, "a_main.parquet")).schema
+    batches = _two_batch_staging(spark, sf_dir)
+    src = scratch(sf_dir, "late_src")
+    cp = scratch(sf_dir, "late_cp")
+    out = scratch(sf_dir, "late_out")
+    schema = read_parquet(spark, os.path.join(batches, "a_main.parquet")).schema
 
     def run_once():
         ev = (
@@ -501,10 +499,10 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    shutil.copy(os.path.join(staged, "a_main.parquet"),
+    shutil.copy(os.path.join(batches, "a_main.parquet"),
                 os.path.join(src, "a_main.parquet"))
     run_once()
-    shutil.copy(os.path.join(staged, "b_late.parquet"),
+    shutil.copy(os.path.join(batches, "b_late.parquet"),
                 os.path.join(src, "b_late.parquet"))
     run_once()
     return spark.read.parquet(out).orderBy("window_start")
@@ -528,10 +526,8 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 hour"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        n = next(_counter)
-        qname = f"hds_stream_{n}"
-        cp = _stage_dir(sf_dir, f"cp_stream_{n}")
-        shutil.rmtree(cp, ignore_errors=True)
+        cp = scratch(sf_dir, "hds_stream")
+        qname = os.path.basename(cp)
         q = (
             agg.writeStream.format("memory")
             .queryName(qname)
@@ -574,16 +570,7 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the batch oracle checks."""
     from pyspark.sql import Window
 
-    from hadoop_deliver_spark.tables import tbl
-
-    src = _stage_dir(sf_dir, "events_stream_src4")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        (
-            tbl(spark, sf_dir, "events")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+    src = _events_four_files(spark, sf_dir)
     ev = (
         spark.readStream.schema(read_parquet(spark, src).schema)
         .format("parquet")
@@ -591,12 +578,8 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(src)
     )
 
-    n = next(_counter)
-    state = _stage_dir(sf_dir, f"upsert_state_{n}")
-    shutil.rmtree(state, ignore_errors=True)
-    os.makedirs(state, exist_ok=True)
-    cp = _stage_dir(sf_dir, f"cp_upsert_{n}")
-    shutil.rmtree(cp, ignore_errors=True)
+    state = scratch(sf_dir, "upsert_state")
+    cp = scratch(sf_dir, "cp_upsert")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -661,28 +644,15 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     redelivers rows it already committed. File sink + checkpoint
     commit log carry the exactly-once guarantee; state here is
     offsets only, so the pattern scales to any backlog size."""
-    from hadoop_deliver_spark.tables import tbl
-
-    src4 = _stage_dir(sf_dir, "events_stream_src4")
-    if not os.path.exists(os.path.join(src4, "_SUCCESS")):
-        (
-            tbl(spark, sf_dir, "events")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src4)
-        )
+    src4 = _events_four_files(spark, sf_dir)
     parts = sorted(
         f for f in os.listdir(src4)
         if f.startswith("part-") and f.endswith(".parquet")
     )
 
-    n = next(_counter)
-    grow = _stage_dir(sf_dir, f"inc_src_{n}")
-    out = _stage_dir(sf_dir, f"inc_out_{n}")
-    cp = _stage_dir(sf_dir, f"inc_cp_{n}")
-    for d in (grow, out, cp):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(grow, exist_ok=True)
+    grow = scratch(sf_dir, "inc_src")
+    out = scratch(sf_dir, "inc_out")
+    cp = scratch(sf_dir, "inc_cp")
 
     schema = read_parquet(spark, src4).schema
 
@@ -905,12 +875,9 @@ def stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
 
-    n = next(_counter)
-    raw_out = _stage_dir(sf_dir, f"fanout_raw_{n}")
-    agg_out = _stage_dir(sf_dir, f"fanout_agg_{n}")
-    cp = _stage_dir(sf_dir, f"fanout_cp_{n}")
-    for d in (raw_out, agg_out, cp):
-        shutil.rmtree(d, ignore_errors=True)
+    raw_out = scratch(sf_dir, "fanout_raw")
+    agg_out = scratch(sf_dir, "fanout_agg")
+    cp = scratch(sf_dir, "fanout_cp")
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()

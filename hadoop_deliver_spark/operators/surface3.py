@@ -53,13 +53,13 @@ def scan_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     backfill-across-eras shape: one logical table, N physical wire
     formats, one plan — each source scan parallelizes
     independently and the union adds no shuffle."""
-    from hadoop_deliver_spark.operators.sources import _ensure_staged, _stage_dir
+    from hadoop_deliver_spark.operators.sources import staged
 
     sup = tbl(spark, sf_dir, "supplier")
-    csv_path = _ensure_staged(
-        sup, _stage_dir(sf_dir, "supplier_csv"), "csv", header=True
+    csv_path = staged(
+        sf_dir, "supplier_csv", lambda tmp: sup.write.csv(tmp, header=True)
     )
-    json_path = _ensure_staged(sup, _stage_dir(sf_dir, "supplier_json"), "json")
+    json_path = staged(sf_dir, "supplier_json", lambda tmp: sup.write.json(tmp))
     schema = "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
     pq = sup.withColumn("src", F.lit("parquet"))
     cs = (
@@ -265,17 +265,14 @@ def scan_csv_reordered_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (the actual failure mode of headerless positional feeds
     like scan_kv_tsv). Read-back must equal the source bit-exactly
     (doubles round-trip via shortest-repr)."""
-    from hadoop_deliver_spark.operators.sources import (
-        _ensure_staged,
-        _stage_dir,
-    )
+    from hadoop_deliver_spark.operators.sources import staged
 
-    sup = tbl(spark, sf_dir, "supplier")
-    path = _ensure_staged(
-        sup.select("s_acctbal", "s_name", "s_suppkey", "s_nationkey"),
-        _stage_dir(sf_dir, "supplier_csv_reordered"),
-        "csv",
-        header=True,
+    path = staged(
+        sf_dir,
+        "supplier_csv_reordered",
+        lambda tmp: tbl(spark, sf_dir, "supplier")
+        .select("s_acctbal", "s_name", "s_suppkey", "s_nationkey")
+        .write.csv(tmp, header=True),
     )
     return (
         spark.read.option("header", True)

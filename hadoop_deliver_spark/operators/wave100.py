@@ -154,21 +154,16 @@ def delivery_backfill_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (partition values only — Spark reads them from directory
     names, no row data); the calendar sequence and islands window
     live on the bounded day axis (allowlisted ts_* shape)."""
-    from hadoop_deliver_spark.operators.sources import (
-        _ensure_staged,
-        _stage_dir,
-    )
+    from hadoop_deliver_spark.operators.sources import staged
 
     e = tbl(spark, sf_dir, "events")
-    delivered = e.select(
-        F.to_date("ts").alias("day"), "event_id"
-    ).filter(F.dayofmonth("day") % 5 != 2)
-    path = _stage_dir(sf_dir, "backfill_sink")
-    _ensure_staged(
-        delivered.withColumn("day", F.col("day").cast("string")),
-        path,
-        "parquet",
-        partitionBy="day",
+    path = staged(
+        sf_dir,
+        "backfill_sink",
+        lambda tmp: e.select(F.to_date("ts").alias("day"), "event_id")
+        .filter(F.dayofmonth("day") % 5 != 2)
+        .withColumn("day", F.col("day").cast("string"))
+        .write.parquet(tmp, partitionBy="day"),
     )
     have = (
         spark.read.parquet(path)

@@ -132,25 +132,23 @@ def scan_parquet_mergeschema(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one two-batch staged write (reused across calls),
     one merged scan with footer-level schema union (no data pass for
     the merge — parquet footers only), one keyed aggregate."""
-    from hadoop_deliver_spark.operators.sources import _stage_dir
+    from hadoop_deliver_spark.operators.sources import staged
 
     from hadoop_deliver_spark.tables import dec2
 
-    o = tbl(spark, sf_dir, "orders")
-    base = _stage_dir(sf_dir, "mergeschema_sink")
-    if not (
-        os.path.exists(os.path.join(base, "b1", "_SUCCESS"))
-        and os.path.exists(os.path.join(base, "b2", "_SUCCESS"))
-    ):
+    def write(tmp: str) -> None:
+        o = tbl(spark, sf_dir, "orders")
         o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey",
             (dec2("o_totalprice") * 100).cast("long").alias("cents"),
-        ).write.mode("overwrite").parquet(os.path.join(base, "b1"))
+        ).write.parquet(os.path.join(tmp, "b1"))
         o.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey",
             (dec2("o_totalprice") * 100).cast("long").alias("cents"),
             F.col("o_orderpriority").alias("priority"),
-        ).write.mode("overwrite").parquet(os.path.join(base, "b2"))
+        ).write.parquet(os.path.join(tmp, "b2"))
+
+    base = staged(sf_dir, "mergeschema_sink", write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(base, "b1"), os.path.join(base, "b2")
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_deliver_spark.operators.sources import _ensure_staged, _stage_dir
+from hadoop_deliver_spark.operators.sources import staged
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -249,9 +249,7 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.rpad(F.col("n_regionkey").cast("string"), 4, " "),
         ).alias("value")
     )
-    path = _ensure_staged(
-        fixed, _stage_dir(sf_dir, "nation_fixed_width"), "text"
-    )
+    path = staged(sf_dir, "nation_fixed_width", lambda tmp: fixed.write.text(tmp))
     raw = spark.read.text(path)
     return (
         raw.select(

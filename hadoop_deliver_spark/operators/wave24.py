@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_deliver_spark.operators.sources import _ensure_staged, _stage_dir
+from hadoop_deliver_spark.operators.sources import staged
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -345,9 +345,7 @@ def scan_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("orderkey")
         .agg(F.sort_array(F.collect_list("item")).alias("items"))
     )
-    path = _ensure_staged(
-        nested, _stage_dir(sf_dir, "orders_json_nested"), "json"
-    )
+    path = staged(sf_dir, "orders_json_nested", lambda tmp: nested.write.json(tmp))
     schema = (
         "orderkey BIGINT, "
         "items ARRAY<STRUCT<ln: INT, qty: BIGINT, price: DOUBLE>>"

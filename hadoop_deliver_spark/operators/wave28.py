@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_deliver_spark.operators.sources import _ensure_staged, _stage_dir
+from hadoop_deliver_spark.operators.sources import staged
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -296,11 +296,8 @@ def scan_csv_null_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("s_acctbal").cast("string"))
         .alias("bal_or_null"),
     )
-    path = _ensure_staged(
-        dirty,
-        _stage_dir(sf_dir, "supplier_csv_na"),
-        "csv",
-        header=True,
+    path = staged(
+        sf_dir, "supplier_csv_na", lambda tmp: dirty.write.csv(tmp, header=True)
     )
     schema = (
         "s_suppkey BIGINT, s_name STRING, "

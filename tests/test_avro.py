@@ -119,3 +119,21 @@ def test_python_roundtrip_null_codec(tmp_path):
     assert schema == _SCHEMA
     assert got == _ROWS
     assert os.path.getsize(path) > 0
+
+
+def test_read_rejects_bad_magic_and_corrupt_sync(tmp_path):
+    """Container bytes come from outside the program, so the header
+    and per-block sync checks raise ValueError, which ``python -O``
+    keeps (an ``assert`` would vanish there)."""
+    import pytest
+
+    path = str(tmp_path / "t.avro")
+    write_container(path, _SCHEMA, _ROWS, codec="null", rows_per_block=2)
+    with open(path, "rb") as f:
+        raw = f.read()
+    with pytest.raises(ValueError, match="not an avro"):
+        read_container(b"Obj\x02" + raw[4:])
+    # the file ends with the last block's copy of the sync marker
+    flipped = raw[:-1] + bytes([raw[-1] ^ 0xFF])
+    with pytest.raises(ValueError, match="sync marker"):
+        read_container(flipped)

@@ -1808,10 +1808,11 @@ _COLLECT_OK = {
     ("streaming.py", "stream_chained_stateful"),
     ("surface3.py", "dq_freshness"),
     ("surface3.py", "delivery_gdpr_erasure"),
-    ("sources.py", "sink_avro"),        # 1-row manifest sum (commit check)
-    ("sources.py", "sink_avro_events"), # 1-row manifest sum (commit check)
-    # calendar-bounded day list (glob staging, ≤ fixture day span)
-    ("extras2.py", "scan_recursive_glob"),
+    # 1-row manifest sum (commit check of sink_avro / sink_avro_events)
+    ("sources.py", "_write_avro_checked"),
+    # calendar-bounded day list (scan_recursive_glob's staging, ≤ fixture
+    # day span)
+    ("extras2.py", "write_day_dirs"),
     # range-partition boundary probe (bounded by #partitions)
     ("fnx2.py", "sink_range_partitioned"),
     # 1-row .first() scalar probes: max gram/node id for bitmap width
@@ -1842,8 +1843,9 @@ _COLLECT_OK = {
     # 15-expression select chains were pure plan-compilation cost)
     ("wave95.py", "agg_raking_ipf"),
     # one-time 25-row dim staging into the avro/json fixture feeds
-    ("sources.py", "scan_avro"),
-    ("sources.py", "scan_json_corrupt"),
+    # (scan_avro / scan_json_corrupt)
+    ("sources.py", "write_two_files"),
+    ("sources.py", "write_feed"),
     # ≤ #partitions rows of d×d partial second moments (d = 64) for
     # the driver eigh — the corpus itself is never collected
     ("wave44.py", "llm_embedding_spectrum"),
